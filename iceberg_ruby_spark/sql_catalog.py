@@ -78,10 +78,13 @@ class _Db:
 
 
 def _parse_uri(uri: str) -> str:
-    """'sqlite:///path/db.sqlite' / 'sqlite:path' / bare path → file path."""
-    if uri.startswith("sqlite:"):
-        rest = uri[len("sqlite:"):]
-        return rest.lstrip("/") if rest.startswith("///") else rest.lstrip("/") or rest
+    """'sqlite:///abs/db.sqlite' / 'sqlite://rel.db' / 'sqlite:rel.db' /
+    bare path → file path.  sqlx's rule: strip ``sqlite://``, else
+    ``sqlite:``; whatever remains is the path, so ``sqlite:///abs`` keeps
+    its leading ``/`` and stays absolute."""
+    for prefix in ("sqlite://", "sqlite:"):
+        if uri.startswith(prefix):
+            return uri[len(prefix):]
     if "://" in uri:
         raise InvalidDataError(
             f"unsupported SQL catalog uri (sqlite profile only): {uri!r}"

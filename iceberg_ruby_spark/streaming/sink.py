@@ -48,8 +48,6 @@ from pyspark.sql.datasource import (
 )
 
 from iceberg_ruby_spark.errors import InvalidDataError
-from iceberg_ruby_spark.streaming._trace import trace as _trace, traced as _traced
-_trace('module-import:sink')
 
 SINK_ID_KEY = "streaming-sink-id"
 BATCH_ID_KEY = "streaming-batch-id"
@@ -66,7 +64,6 @@ class _FileMsg(WriterCommitMessage):
 
 
 class EngineTableStreamWriter(DataSourceStreamArrowWriter):
-    @_traced
     def __init__(self, options: dict, schema, overwrite: bool):
         self.location = options.get("location") or options.get("path")
         if not self.location:
@@ -378,7 +375,6 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
             "nulls": nulls,
         }
 
-    @_traced
     def write(self, iterator: Iterator) -> _FileMsg:
         """Arrow-native executor write (DataSourceStreamArrowWriter):
         Spark ships this task's rows as RecordBatches — no per-row pickle
@@ -535,7 +531,6 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         self._last_batch_cache = last
         return last
 
-    @_traced
     def commit(self, messages: List[Optional[_FileMsg]], batchId: int) -> None:
         # session-less driver worker: the commit is pure metadata — build
         # manifest entries from the executor-computed stats and run the
@@ -610,7 +605,7 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
         prune with the per-entry ``key-bounds`` hint instead of a stored
         path list, so a partition-aligned CDC feed still scopes each
         delete's planning to the overlapping files."""
-        from iceberg_ruby_spark.table import _plain_bound_literal as _lit
+        from iceberg_ruby_spark.table import _seq_scoped_delete_entry
 
         head = (
             table.snapshot_for_ref(self.branch)
@@ -632,33 +627,18 @@ class EngineTableStreamWriter(DataSourceStreamArrowWriter):
                 except OSError:
                     pass
         else:
-            for d in dels:
-                entry = {
-                    "delete-file": d["path"],
-                    "seq-scoped": True,
-                    "deleted-records": d["count"],
-                    "content": "equality-deletes",
-                    "equality-ids": list(self._eq_ids),
-                    "equality-cols": list(self._eq_cols),
-                    "spec-id": self._spec_id,
-                }
-                lo = {
-                    c: w
-                    for c, v in (d.get("key_lower") or {}).items()
-                    if (w := _lit(v)) is not None
-                }
-                hi = {
-                    c: w
-                    for c, v in (d.get("key_upper") or {}).items()
-                    if (w := _lit(v)) is not None
-                }
-                kb = {c: (lo[c], hi[c]) for c in lo if c in hi}
-                if kb:
-                    entry["key-bounds"] = {
-                        "lower": {c: v[0] for c, v in kb.items()},
-                        "upper": {c: v[1] for c, v in kb.items()},
-                    }
-                delete_entries.append(entry)
+            delete_entries = [
+                _seq_scoped_delete_entry(
+                    d["path"],
+                    d["count"],
+                    self._eq_ids,
+                    self._eq_cols,
+                    self._spec_id,
+                    d.get("key_lower") or {},
+                    d.get("key_upper") or {},
+                )
+                for d in dels
+            ]
         if not data_entries and not delete_entries:
             return
         branch = self.branch if self.branch else "main"

@@ -86,8 +86,6 @@ from pyspark.sql.datasource import (
 )
 
 from iceberg_ruby_spark.errors import InvalidDataError
-from iceberg_ruby_spark.streaming._trace import trace as _trace, traced as _traced
-_trace('module-import:source')
 
 _MOR_DELETE_MODES = {
     "merge-on-read",
@@ -259,7 +257,6 @@ class _NeedsContentDiff(Exception):
 
 
 class EngineTableStreamReader(DataSourceStreamReader):
-    @_traced
     def __init__(self, options: dict):
         self.location = options.get("location") or options.get("path")
         if not self.location:
@@ -399,7 +396,6 @@ class EngineTableStreamReader(DataSourceStreamReader):
         )
 
     # -- offsets ----------------------------------------------------------
-    @_traced
     def initialOffset(self) -> dict:
         # None = from table creation (consume all existing data first);
         # starting_snapshot_id = start AFTER that snapshot
@@ -419,7 +415,6 @@ class EngineTableStreamReader(DataSourceStreamReader):
             return r.get("snapshot-id")
         return meta.current_snapshot_id
 
-    @_traced
     def latestOffset(self) -> dict:
         meta = _ops(self.location).load()
         head = self._head(meta)
@@ -597,7 +592,6 @@ class EngineTableStreamReader(DataSourceStreamReader):
             )
         return False
 
-    @_traced
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         start_id, end_id = start.get("snapshot_id"), end.get("snapshot_id")
         start_pos, end_pos = start.get("pos"), end.get("pos")
@@ -1465,7 +1459,6 @@ class EngineTableStreamReader(DataSourceStreamReader):
             if b.num_rows:
                 yield b
 
-    @_traced
     def read(self, partition: InputPartition) -> Iterator:
         """Executor read: an iterator of ``pyarrow.RecordBatch`` (PySpark
         4.1's DataSource runtime accepts batch iterators and forwards

@@ -40,12 +40,14 @@ projections into the Parquet scan, and hidden-partition columns written by
 
 from __future__ import annotations
 
+import contextlib
 import json
 import re
 import os
 import time
 import uuid as uuid_mod
 from dataclasses import dataclass
+from functools import reduce
 from typing import Any, Iterable, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
@@ -3126,8 +3128,6 @@ class Table:
         the reserved columns physically) take their non-null cells straight
         from the file; null cells and inheritance-based files derive
         ``first-row-id + position`` / the file's data sequence number."""
-        import pyspark.sql.types as _T
-
         df = self._read_entries(
             entries,
             schema=schema,
@@ -3144,15 +3144,7 @@ class Table:
             if "path" in e
         ]
         mapping = small_local_df(
-            self.spark,
-            rows,
-            _T.StructType(
-                [
-                    _T.StructField("__lin_f", _T.StringType()),
-                    _T.StructField("__lin_frid", _T.LongType()),
-                    _T.StructField("__lin_seq", _T.LongType()),
-                ]
-            ),
+            self.spark, rows, "__lin_f string, __lin_frid long, __lin_seq long"
         )
         out = (
             df.join(F.broadcast(mapping), "__lin_f", "left")
@@ -3197,9 +3189,8 @@ class Table:
         # parquet that later scans reject (round-2 test finding via merge).
         # The alias re-attaches the schema metadata the cast would drop:
         # "parquet.field.id" makes the writer stamp Iceberg field ids into
-        # the parquet footer (fieldId.write.enabled is on by default in
-        # Spark 3.4+; pinned here so bare sessions behave identically)
-        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+        # the parquet footer
+        self._enable_field_id_writes()
         # int64-micros timestamps — the Iceberg spec's physical form.
         # Spark's INT96 legacy default additionally carries NO footer
         # statistics, which would starve external readers of bounds and
@@ -3218,19 +3209,13 @@ class Table:
             if not isinstance(f.field_type, ice_t.UnknownType)
         ]
         if lineage_cols:
-            out_cols.append(
-                F.col("_row_id")
-                .cast("long")
-                .alias("_row_id", metadata={"parquet.field.id": self._ROW_ID_FIELD_ID})
-            )
-            out_cols.append(
-                F.col("_last_updated_sequence_number")
-                .cast("long")
-                .alias(
-                    "_last_updated_sequence_number",
-                    metadata={"parquet.field.id": self._LAST_UPDATED_SEQ_FIELD_ID},
+            out_cols += [
+                F.col(c).cast("long").alias(c, metadata={"parquet.field.id": fid})
+                for c, fid in (
+                    ("_row_id", self._ROW_ID_FIELD_ID),
+                    ("_last_updated_sequence_number", self._LAST_UPDATED_SEQ_FIELD_ID),
                 )
-            )
+            ]
         df = df.select(*out_cols)
         # shredded variant paths: typed extraction columns written
         # alongside (variant_shred_specs) — they get manifest bounds, so
@@ -3838,39 +3823,7 @@ class Table:
             # next to the data they delete from, so broadcast them — the
             # distributed analog of Iceberg readers merging sorted position
             # lists per file
-            # Spec-shaped delete files (current write path) store the FULL
-            # data-file path under the table location at write time, which
-            # each entry records as ``base-location``; older files stored
-            # location-relative paths, and pre-r4 files absolute paths with
-            # no recorded base.  Normalize all three: strip any known base
-            # prefix (recorded bases + the current location), then
-            # re-absolutize relative remainders against the current
-            # location — so spec content stays correct after rename_table.
-            # "Absolute" means a leading slash OR a URI scheme: an s3a://
-            # path must not be mistaken for relative and prefixed.  (On a
-            # real cluster the remaining step is s3↔s3a scheme
-            # normalization against _metadata.file_path — part of the
-            # documented fs.s3a data-plane work.)
-            loc = self.ops.location
-            base = (loc if "://" in loc else os.path.abspath(loc)).rstrip("/")
-            bases = {base} | {
-                e["base-location"].rstrip("/")
-                for e in pos_files + dv_files
-                if e.get("base-location")
-            }
-            strip_pat = (
-                "^("
-                + "|".join(
-                    re.escape(b + "/")
-                    for b in sorted(bases, key=len, reverse=True)
-                )
-                + ")"
-            )
-            fp = F.regexp_replace(F.col("file_path"), strip_pat, "")
-            is_abs = fp.rlike("^(/|[A-Za-z][A-Za-z0-9+.-]*:)")
-            abs_fp = F.when(is_abs, fp).otherwise(
-                F.concat(F.lit(base + "/"), fp)
-            )
+            abs_fp = self._absolute_delete_paths(pos_files + dv_files)
             del_parts = []
             if pos_files:
                 del_parts.append(
@@ -3887,35 +3840,16 @@ class Table:
                 # The decoded set is deleted-rows-sized — the same driver
                 # posture as broadcasting the positional delete sets.
                 from iceberg_ruby_spark.deletion_vectors import decode_dv_blob
-                import pyspark.sql.types as _T
 
-                dv_rows = []
-                blob_cache: dict[str, bytes] = {}
-                for e in dv_files:
-                    p = self.ops._abs(e["delete-file"])
-                    if p not in blob_cache:
-                        blob_cache[p] = self.ops.io.read_bytes(p)
-                    payload = blob_cache[p][
-                        e["content-offset"] : e["content-offset"] + e["content-size"]
-                    ]
-                    ref = self.ops._abs(e["referenced-data-file"])
-                    dv_rows.extend((ref, pos) for pos in decode_dv_blob(payload))
+                dv_rows = [
+                    (self.ops._abs(e["referenced-data-file"]), pos)
+                    for e, payload in self._dv_payloads(dv_files)
+                    for pos in decode_dv_blob(payload)
+                ]
                 del_parts.append(
-                    small_local_df(
-                        self.spark,
-                        dv_rows,
-                        _T.StructType(
-                            [
-                                _T.StructField("file_path", _T.StringType()),
-                                _T.StructField("pos", _T.LongType()),
-                            ]
-                        ),
-                    )
+                    small_local_df(self.spark, dv_rows, "file_path string, pos long")
                 )
-            del_src = del_parts[0]
-            for p_ in del_parts[1:]:
-                del_src = del_src.unionByName(p_)
-            del_df = del_src.select(
+            del_df = reduce(DataFrame.unionByName, del_parts).select(
                 abs_fp.alias(path_name), F.col("pos").alias(pos_name)
             )
             out = out.join(F.broadcast(del_df), [path_name, pos_name], "left_anti")
@@ -3941,8 +3875,6 @@ class Table:
             #    the JVM stack at plan time past ~100 micro-batches, and
             #    Iceberg readers likewise merge all equality deletes into
             #    one pass per file.
-            import pyspark.sql.types as _T
-
             seq_pairs = []
             for de in entries:
                 if "delete-predicate" in de or "delete-file" in de:
@@ -3952,14 +3884,7 @@ class Table:
                 for p in self._entry_files([de]):
                     seq_pairs.append((self.ops._abs(p), seqv))
             seq_df = small_local_df(
-                self.spark,
-                seq_pairs,
-                _T.StructType(
-                    [
-                        _T.StructField("__mor_sf", _T.StringType()),
-                        _T.StructField("__mor_seq", _T.LongType()),
-                    ]
-                ),
+                self.spark, seq_pairs, "__mor_sf string, __mor_seq long"
             )
             out = out.join(
                 F.broadcast(seq_df),
@@ -3988,14 +3913,7 @@ class Table:
                     for e in groups[cols_key]
                 ]
                 fseq_df = small_local_df(
-                    self.spark,
-                    fseq,
-                    _T.StructType(
-                        [
-                            _T.StructField("__eqsf", _T.StringType()),
-                            _T.StructField("__eq_seq", _T.LongType()),
-                        ]
-                    ),
+                    self.spark, fseq, "__eqsf string, __eq_seq long"
                 )
                 keys_df = (
                     _memo_read_parquet(self.spark, [p for p, _ in fseq])
@@ -4146,16 +4064,23 @@ class Table:
         return out
 
     def _matching_files(
-        self, entries: list[dict[str, Any]], cond, cond_str: Optional[str] = None
+        self,
+        entries: list[dict[str, Any]],
+        condition: Union[str, Any],
+        on: Optional[list[str]] = None,
     ) -> dict[str, int]:
-        """Find data files containing rows that match ``cond`` — one Spark job
-        with the predicate pushed into the Parquet scan; returns
+        """Find data files containing rows that match ``condition`` — one
+        Spark job with the predicate pushed into the Parquet scan; returns
         {file_path: matching_row_count}.  This is the pruning step that makes
         mutations file-local instead of full-table rewrites.  When the
         condition is a parseable string, manifest bounds pre-prune the scan
-        input so non-overlapping files are never even opened."""
-        if cond_str is not None:
-            tree = _parse_predicate(cond_str)
+        input so non-overlapping files are never even opened.  With ``on``,
+        ``condition`` is a source frame and rows match by key (semi-join
+        against its distinct keys; AQE broadcasts when small)."""
+        cond = condition
+        if isinstance(condition, str):
+            cond = F.expr(condition)
+            tree = _parse_predicate(condition)
             if tree is not None:
                 entries = self._prune_by_stats(entries, tree)
         if not self._entry_files(entries):
@@ -4163,7 +4088,11 @@ class Table:
         # schema-evolution-aware read (old files projected by field id) with
         # the source file path carried alongside
         df = self._read_entries(entries, file_col="__file")
-        rows = df.filter(cond).groupBy("__file").agg(F.count(F.lit(1)).alias("n")).collect()
+        if on is None:
+            df = df.filter(cond)
+        else:
+            df = df.join(condition.select(*on).distinct(), on, "left_semi")
+        rows = df.groupBy("__file").agg(F.count(F.lit(1)).alias("n")).collect()
         return {r["__file"]: r["n"] for r in rows}
 
     def _commit_snapshot(
@@ -4820,65 +4749,101 @@ class Table:
                 "to rewrite the ORC imports as parquet first"
             )
 
-    def _positional_delete_build(
-        self, cur_entries: list[dict[str, Any]], cond
-    ) -> tuple[list[dict[str, Any]], int]:
-        """Write spec-shaped positional delete files for live rows matching
-        ``cond`` and return ``(delete_entries, deleted_count)`` WITHOUT
-        committing — delete_where commits them alone, MoR UPDATE commits
-        them together with the new row versions."""
-        self._refuse_positional_over_orc(cur_entries)
-        # positions of rows matching NOW, with all prior MoR deletes
-        # applied so already-dead rows are not re-deleted (keeps the
-        # returned count an honest delta)
-        live = self._read_entries(cur_entries, file_col="__f", pos_col="__p")
-        # store file_path RELATIVE to the table location (like every
-        # manifest path) so positional deletes survive rename_table /
-        # register_table moving the table tree; absolutized on read
-        # strip whichever location form the scan surfaced — the posix
-        # abspath (local file scheme) or the raw location (URI schemes
-        # like s3://, where os.path.abspath would mangle the prefix)
-        loc_prefixes = sorted(
-            {
-                os.path.abspath(self.ops.location) + os.sep,
-                self.ops.location.rstrip("/") + "/",
-            },
+    def _table_base(self) -> str:
+        """The location delete entries record as ``base-location``: the raw
+        URI for object stores, the absolute path locally."""
+        loc = self.ops.location
+        return (loc if "://" in loc else os.path.abspath(loc)).rstrip("/")
+
+    def _absolute_delete_paths(self, delete_entries: list[dict[str, Any]]):
+        """The ``file_path`` column of position deletes read from
+        ``delete_entries``, as absolute paths under the CURRENT location.
+        Spec-shaped delete files (current write path) store the FULL
+        data-file path under the table location at write time, which each
+        entry records as ``base-location``; older files stored
+        location-relative paths, and pre-r4 files absolute paths with no
+        recorded base.  Normalize all three: strip any known base prefix
+        (recorded bases + the current location), then re-absolutize
+        relative remainders against the current location — so spec content
+        stays correct after rename_table.  "Absolute" means a leading slash
+        OR a URI scheme: an s3a:// path must not be mistaken for relative
+        and prefixed.  (On a real cluster the remaining step is s3↔s3a
+        scheme normalization against _metadata.file_path — part of the
+        documented fs.s3a data-plane work.)"""
+        base = self._table_base()
+        bases = {base} | {
+            e["base-location"].rstrip("/")
+            for e in delete_entries
+            if e.get("base-location")
+        }
+        strip_pat = (
+            "^("
+            + "|".join(
+                re.escape(b + "/") for b in sorted(bases, key=len, reverse=True)
+            )
+            + ")"
+        )
+        fp = F.regexp_replace(F.col("file_path"), strip_pat, "")
+        is_abs = fp.rlike("^(/|[A-Za-z][A-Za-z0-9+.-]*:)")
+        return F.when(is_abs, fp).otherwise(F.concat(F.lit(base + "/"), fp))
+
+    def _relative_file_col(self, col: str) -> Column:
+        """Scanned data-file paths in ``col`` RELATIVE to the table location
+        (like every manifest path), so deletes survive rename_table moving
+        the table tree.  Strips whichever location form the scan surfaced —
+        the posix abspath (local file scheme) or the raw location (URI
+        schemes like s3://, where os.path.abspath would mangle it)."""
+        loc = self.ops.location
+        prefixes = sorted(
+            {os.path.abspath(loc) + os.sep, loc.rstrip("/") + "/"},
             key=len,
             reverse=True,
         )
-        pat = "^(" + "|".join(re.escape(p) for p in loc_prefixes) + ")"
-        rel_fp = F.regexp_replace(F.col("__f"), pat, "")
-        # Spec-shaped position delete files (format spec "Position
-        # Delete Files"): column names file_path/pos with the reserved
-        # field ids 2147483546/2147483545 stamped in the parquet
-        # footer, file_path as the full data-file path (the same form
-        # the Avro manifests publish), rows clustered per target file
-        # and sorted by (file_path, pos).  Rename-survival moves to the
-        # entry's ``base-location`` (the table location at write time):
-        # the read path strips any recorded base and re-absolutizes
-        # against the current location, so the file CONTENT stays
-        # spec-readable while the engine still survives rename_table.
-        loc = self.ops.location
-        base = (loc if "://" in loc else os.path.abspath(loc)).rstrip("/")
-        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        hits = live.filter(cond).select(
-            F.concat(F.lit(base + "/"), rel_fp).alias(
+        pat = "^(" + "|".join(re.escape(p) for p in prefixes) + ")"
+        return F.regexp_replace(F.col(col), pat, "")
+
+    def _new_delete_path(self, suffix: str = "") -> str:
+        """A fresh ``deletes-*`` path under the data dir."""
+        return os.path.join(
+            self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}{suffix}"
+        )
+
+    def _enable_field_id_writes(self) -> None:
+        """Parquet writers stamp ``parquet.field.id`` column metadata into
+        the footer only with ``spark.sql.parquet.fieldId.write.enabled``
+        (on by default since Spark 3.4).  Sessions that turned it off get it
+        back on; a session that already has it is left untouched."""
+        key = "spark.sql.parquet.fieldId.write.enabled"
+        if str(self.spark.conf.get(key)).lower() != "true":
+            self.spark.conf.set(key, "true")
+
+    def _write_position_deletes(
+        self, rows: DataFrame, base: str
+    ) -> tuple[str, list[dict[str, Any]]]:
+        """Write ``rows`` of (``file_path``: full data-file path, ``pos``)
+        as spec-shaped position delete files (format spec "Position Delete
+        Files"): the reserved field ids 2147483546/2147483545 stamped in
+        the parquet footer, one delete file per target data file (hash
+        distribution on file_path), positions sorted within — the layout
+        Iceberg readers merge most cheaply.  Returns the directory and one
+        entry per part file.  Rename survival rides the entry's
+        ``base-location`` (``base``, the location at write time): the read
+        path re-absolutizes against the current location, so the file
+        CONTENT stays spec-readable."""
+        rows = rows.select(
+            F.col("file_path").alias(
                 "file_path", metadata={"parquet.field.id": 2147483546}
             ),
-            F.col("__p")
+            F.col("pos")
             .cast("long")
             .alias("pos", metadata={"parquet.field.id": 2147483545}),
         )
-        del_dir = os.path.join(
-            self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-        )
-        # one delete file per target data file (hash distribution on
-        # file_path), positions sorted within — the layout Iceberg
-        # readers merge most cheaply
-        hits.repartition(F.col("file_path")).sortWithinPartitions(
+        del_dir = self._new_delete_path()
+        self._enable_field_id_writes()
+        rows.repartition(F.col("file_path")).sortWithinPartitions(
             "file_path", "pos"
         ).write.parquet(del_dir)
-        written = _read_back_parquet(self.spark, del_dir, hits.schema)
+        written = _read_back_parquet(self.spark, del_dir, rows.schema)
         # per-part-file counts + target scope in ONE footer-cheap job
         per_file = (
             written.groupBy(F.col("_metadata.file_path").alias("__part"))
@@ -4888,31 +4853,59 @@ class Table:
             )
             .collect()
         )
-        deleted = sum(r["__n"] for r in per_file)
+        strip = base + "/"
+        return del_dir, [
+            {
+                "delete-file": _spark_uri_path(r["__part"]),
+                "applies-to": sorted(
+                    t[len(strip):] if t.startswith(strip) else t
+                    for t in r["__targets"]
+                ),
+                "deleted-records": r["__n"],
+                "content": "position-deletes",
+                "base-location": base,
+                # spec at write time — keeps the Avro per-spec manifest
+                # grouping correct even if the table's default spec
+                # evolves after this delete
+                "spec-id": self.default_spec_id,
+            }
+            for r in sorted(per_file, key=lambda r: r["__part"])
+        ]
+
+    def _positional_delete_build(
+        self, cur_entries: list[dict[str, Any]], cond
+    ) -> tuple[list[dict[str, Any]], list[dict[str, Any]], int, Optional[str]]:
+        """Positional delete files for the live rows matching ``cond``,
+        WITHOUT committing (:meth:`_mor_position_commit` commits them).
+        Returns ``(carried_entries, delete_entries, deleted_count,
+        delete_dir)`` — the :meth:`_dv_delete_build` shape; every current
+        entry is carried."""
+        # positions of rows matching NOW, with all prior MoR deletes
+        # applied so already-dead rows are not re-deleted (keeps the
+        # returned count an honest delta)
+        live = self._read_entries(cur_entries, file_col="__f", pos_col="__p")
+        base = self._table_base()
+        full_path = F.concat(F.lit(base + "/"), self._relative_file_col("__f"))
+        hits = live.filter(cond).select(
+            full_path.alias("file_path"), F.col("__p").alias("pos")
+        )
+        del_dir, del_entries = self._write_position_deletes(hits, base)
+        deleted = sum(e["deleted-records"] for e in del_entries)
         if not deleted:
             self.ops.io.delete_prefix(del_dir)
-            return [], 0
-        strip = base + "/"
-        del_entries = []
-        for r in sorted(per_file, key=lambda r: r["__part"]):
-            part = _spark_uri_path(r["__part"])
-            del_entries.append(
-                {
-                    "delete-file": part,
-                    "applies-to": sorted(
-                        t[len(strip):] if t.startswith(strip) else t
-                        for t in r["__targets"]
-                    ),
-                    "deleted-records": r["__n"],
-                    "content": "position-deletes",
-                    "base-location": base,
-                    # spec at write time — keeps the Avro per-spec
-                    # manifest grouping correct even if the table's
-                    # default spec evolves after this delete
-                    "spec-id": self.default_spec_id,
-                }
-            )
-        return del_entries, deleted
+            return cur_entries, [], 0, None
+        return cur_entries, del_entries, deleted, del_dir
+
+    def _dv_payloads(self, dv_entries: list[dict[str, Any]]):
+        """``(entry, vector blob)`` per deletion-vector entry, sliced by the
+        entry's offset/length; each Puffin file is read once."""
+        files: dict[str, bytes] = {}
+        for e in dv_entries:
+            p = self.ops._abs(e["delete-file"])
+            if p not in files:
+                files[p] = self.ops.io.read_bytes(p)
+            start = e["content-offset"]
+            yield e, files[p][start : start + e["content-size"]]
 
     def _dv_delete_build(
         self, cur_entries: list[dict[str, Any]], cond
@@ -4923,28 +4916,16 @@ class Table:
         vector recording the blob's offset/length (deletion_vectors.py
         implements the portable roaring + blob formats, JVM-cross-
         verified).  Returns ``(carried_entries, delete_entries,
-        deleted_count, puffin_path)`` WITHOUT committing — delete_where
-        commits the vectors alone, MoR UPDATE commits them together with
-        the new row versions; callers drop ``puffin_path`` and rebuild
-        from fresh state if the optimistic commit loses a race."""
+        deleted_count, puffin_path)`` WITHOUT committing —
+        :meth:`_mor_position_commit` commits them, drops ``puffin_path`` and
+        rebuilds from fresh state if the optimistic commit loses a race."""
         from iceberg_ruby_spark.deletion_vectors import (
             decode_dv_blob,
             encode_dv_blob,
         )
         from iceberg_ruby_spark.puffin import read_puffin, write_puffin
 
-        self._refuse_positional_over_orc(cur_entries)
         live = self._read_entries(cur_entries, file_col="__f", pos_col="__p")
-        loc_prefixes = sorted(
-            {
-                os.path.abspath(self.ops.location) + os.sep,
-                self.ops.location.rstrip("/") + "/",
-            },
-            key=len,
-            reverse=True,
-        )
-        pat = "^(" + "|".join(re.escape(p) for p in loc_prefixes) + ")"
-        rel_fp = F.regexp_replace(F.col("__f"), pat, "")
         # EXECUTOR-SIDE bitmap build: positions never reach the
         # driver.  Matching (file, pos) pairs are grouped by data
         # file and a grouped pandas UDF builds each file's roaring
@@ -4961,38 +4942,19 @@ class Table:
         # as COMPRESSED payload bytes on a broadcast file-keyed
         # join; the union with the new positions happens inside the
         # grouped build, also executor-side.
-        import pyspark.sql.types as _T
-
-        loc = self.ops.location
-        base = (loc if "://" in loc else os.path.abspath(loc)).rstrip("/")
+        base = self._table_base()
         prior_rows = []
         prior_by_rf = {}
-        for e in cur_entries:
-            if e.get("content") == "deletion-vector":
-                data = self.ops.io.read_bytes(self.ops._abs(e["delete-file"]))
-                payload = data[
-                    e["content-offset"] : e["content-offset"] + e["content-size"]
-                ]
-                rf = e["referenced-data-file"]
-                prior_rows.append((rf, bytearray(payload)))
-                prior_by_rf[rf] = e
-        prior_schema = _T.StructType(
-            [
-                _T.StructField("__rf", _T.StringType()),
-                _T.StructField("__prior", _T.BinaryType()),
-            ]
+        dvs = [e for e in cur_entries if e.get("content") == "deletion-vector"]
+        for e, payload in self._dv_payloads(dvs):
+            prior_rows.append((e["referenced-data-file"], bytearray(payload)))
+            prior_by_rf[e["referenced-data-file"]] = e
+        prior_df = self.spark.createDataFrame(
+            prior_rows, "__rf string, __prior binary"
         )
-        prior_df = self.spark.createDataFrame(prior_rows, prior_schema)
         hits = live.filter(cond).select(
-            rel_fp.alias("__rf"), F.col("__p").cast("long").alias("__pos")
-        )
-        built_schema = _T.StructType(
-            [
-                _T.StructField("__rf", _T.StringType()),
-                _T.StructField("__blob", _T.BinaryType()),
-                _T.StructField("__card", _T.LongType()),
-                _T.StructField("__hits", _T.LongType()),
-            ]
+            self._relative_file_col("__f").alias("__rf"),
+            F.col("__p").cast("long").alias("__pos"),
         )
 
         def _build_vector(pdf):
@@ -5015,7 +4977,9 @@ class Table:
         built = sorted(
             hits.join(F.broadcast(prior_df), "__rf", "left")
             .groupBy("__rf")
-            .applyInPandas(_build_vector, built_schema)
+            .applyInPandas(
+                _build_vector, "__rf string, __blob binary, __card long, __hits long"
+            )
             .collect(),
             key=lambda r: r["__rf"],
         )
@@ -5026,9 +4990,8 @@ class Table:
             prior_by_rf[r["__rf"]] for r in built if r["__rf"] in prior_by_rf
         ]
         carried = [e for e in cur_entries if e not in replaced]
-        blobs = []
-        for r in built:
-            blobs.append(
+        puffin_bytes = write_puffin(
+            [
                 {
                     "type": "deletion-vector-v1",
                     # snapshot-id/sequence-number are unknown until
@@ -5043,30 +5006,28 @@ class Table:
                         "cardinality": str(r["__card"]),
                     },
                 }
-            )
-        puffin_bytes = write_puffin(blobs)
-        dv_path = os.path.join(
-            self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}.puffin"
+                for r in built
+            ]
         )
+        dv_path = self._new_delete_path(".puffin")
         self.ops.io.write_bytes_atomic(dv_path, puffin_bytes)
         metas, _props = read_puffin(puffin_bytes)
-        del_entries = []
-        for r, m in zip(built, metas):
-            del_entries.append(
-                {
-                    "delete-file": dv_path,
-                    "content": "deletion-vector",
-                    "referenced-data-file": r["__rf"],
-                    "content-offset": m["offset"],
-                    "content-size": m["length"],
-                    # the vector's cardinality (spec record_count) —
-                    # includes positions merged from the replaced DV
-                    "deleted-records": r["__card"],
-                    "applies-to": [r["__rf"]],
-                    "base-location": base,
-                    "spec-id": self.default_spec_id,
-                }
-            )
+        del_entries = [
+            {
+                "delete-file": dv_path,
+                "content": "deletion-vector",
+                "referenced-data-file": r["__rf"],
+                "content-offset": m["offset"],
+                "content-size": m["length"],
+                # the vector's cardinality (spec record_count) —
+                # includes positions merged from the replaced DV
+                "deleted-records": r["__card"],
+                "applies-to": [r["__rf"]],
+                "base-location": base,
+                "spec-id": self.default_spec_id,
+            }
+            for r, m in zip(built, metas)
+        ]
         return carried, del_entries, deleted, dv_path
 
     def delete_where(
@@ -5117,62 +5078,15 @@ class Table:
             # spec-readable (tests/test_spec_reader.py round-trips it).
             mode = "merge-on-read-dv"
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        target = branch or MAIN_BRANCH
         entries = self._current_entries(branch)
-        if mode == "merge-on-read-positional":
-            del_entries, deleted = self._positional_delete_build(entries, cond)
-            if not deleted:
-                return 0
-            self._commit_snapshot(
-                "delete",
-                entries + del_entries,
-                {"deleted-records": deleted, "mode": "merge-on-read-positional"},
-                base_snapshot_id=self._branch_head_id(branch),
-                branch=target,
-            )
-            return deleted
-        if mode == "merge-on-read-dv":
-            # Operation-level optimistic retry: two DV writers racing on
-            # the same data file cannot both commit (the rebase would leave
-            # two vectors on one file, violating the v3 one-DV-per-file
-            # invariant) — _commit_snapshot detects the collision and the
-            # loser recomputes everything from fresh state, re-merging the
-            # winner's vector.
-            for attempt in range(self._commit_retries() + 1):
-                cur_entries = (
-                    entries if attempt == 0 else self._current_entries(branch)
-                )
-                carried, del_entries, deleted, dv_path = self._dv_delete_build(
-                    cur_entries, cond
-                )
-                if not deleted:
-                    return 0
-                try:
-                    self._commit_snapshot(
-                        "delete",
-                        carried + del_entries,
-                        {"deleted-records": deleted, "mode": "merge-on-read-dv"},
-                        base_snapshot_id=self._branch_head_id(branch),
-                        branch=target,
-                    )
-                    return deleted
-                except InvalidDataError as exc:
-                    if "deletion vector" not in str(exc):
-                        raise
-                    # lost the race to another DV writer: drop this
-                    # attempt's puffin and rebuild against fresh state
-                    self.ops.io.delete(dv_path)
-                    self.refresh()
-                    _commit_backoff(attempt)
-            raise InvalidDataError(
-                "deletion-vector commit conflict: too many retries"
-            )
+        if mode in ("merge-on-read-positional", "merge-on-read-dv"):
+            return self._mor_position_commit(mode, cond, branch, entries=entries)
         if mode == "merge-on-read":
             if not isinstance(condition, str):
                 raise InvalidDataError(
                     "merge-on-read delete requires a string condition"
                 )
-            hits = self._matching_files(entries, cond, cond_str=condition)
+            hits = self._matching_files(entries, condition)
             deleted = sum(hits.values())
             if not deleted:
                 return 0
@@ -5183,43 +5097,177 @@ class Table:
                 entries + [{"delete-predicate": condition, "applies-to": sorted(hits)}],
                 {"deleted-records": deleted, "mode": "merge-on-read"},
                 base_snapshot_id=self._branch_head_id(branch),
-                branch=target,
+                branch=branch or MAIN_BRANCH,
             )
             return deleted
         if mode != "copy-on-write":
             raise InvalidDataError(f"unknown delete mode: {mode}")
-        data, preds = self._split_entries(entries)
         # match against the FULL entry list so prior MoR deletes apply:
         # the returned count stays an honest delta (rows already dead via
         # a DV/positional/equality/predicate entry are not re-counted) and
         # files whose matches are all dead are not needlessly rewritten
-        hits = self._matching_files(
-            entries, cond, cond_str=condition if isinstance(condition, str) else None
-        )
+        hits = self._matching_files(entries, condition)
         deleted = sum(hits.values())
-        if not hits:
-            return 0
-        hit_entries = [e for e in data if e.get("path") in hits or "data-dir" in e]
-        keep_entries = [e for e in data if e.get("path") not in hits and "data-dir" not in e]
-        # outstanding MoR predicates apply while reading hit files so their
-        # deleted rows are not resurrected into the rewrite; survivors keep
-        # their row lineage (id AND sequence — a delete doesn't update them)
-        # via materialized reserved columns in the rewritten files
-        survivors = self._read_entries_with_lineage(hit_entries + preds).filter(
-            ~cond | cond.isNull()
-        )
-        new_entries = self._write_data_dir(survivors, lineage_cols=True)
+        if hits:
+            self._cow_rewrite(
+                entries,
+                hits,
+                lambda rows: rows.filter(~cond | cond.isNull()),
+                "delete",
+                {"deleted-records": deleted},
+                branch,
+            )
+        return deleted
+
+    def _cow_rewrite(
+        self,
+        entries: list[dict[str, Any]],
+        hits: Optional[Iterable[str]],
+        transform,
+        operation: str,
+        summary: dict,
+        branch: Optional[str],
+    ) -> None:
+        """Copy-on-write materializer shared by DELETE, UPDATE and MERGE:
+        rewrite the data files in ``hits`` (all when None) as ``transform``
+        of their live rows, carry the rest by reference, one commit.
+        Outstanding MoR deletes apply while reading the hit files (their
+        dead rows are not resurrected) and stay scoped to the kept files.
+        Row lineage rides the rewrite as materialized reserved columns:
+        ``transform`` sees ``_row_id`` / ``_last_updated_sequence_number``
+        and NULLs the sequence cell of rows it changes, which then inherit
+        the commit's sequence on read — spec v3's materialization rules."""
+        data, preds = self._split_entries(entries)
+        if hits is None:
+            hit_entries, keep_entries = list(data), []
+        else:
+            hit_entries = [e for e in data if e.get("path") in hits or "data-dir" in e]
+            keep_entries = [
+                e for e in data if e.get("path") not in hits and "data-dir" not in e
+            ]
+        rows = transform(self._read_entries_with_lineage(hit_entries + preds))
+        new_entries = self._write_data_dir(rows, lineage_cols=True)
         for e in new_entries:
             e["materialized-lineage"] = True
         kept_paths = {e["path"] for e in keep_entries if "path" in e}
         self._commit_snapshot(
-            "delete",
+            operation,
             keep_entries + new_entries + self._live_preds(preds, kept_paths, keep_entries),
-            {"deleted-records": deleted},
+            summary,
             base_snapshot_id=self._branch_head_id(branch),
-            branch=target,
+            branch=branch or MAIN_BRANCH,
         )
-        return deleted
+
+    def _mor_position_commit(
+        self,
+        mode: str,
+        cond,
+        branch: Optional[str],
+        entries: Optional[list[dict[str, Any]]] = None,
+        assignments: Optional[dict[str, Any]] = None,
+    ) -> int:
+        """Merge-on-read by position: mark the live rows matching ``cond``
+        dead — positional delete files (``merge-on-read-positional``) or
+        deletion vectors (``merge-on-read-dv``) — and commit; returns the
+        matched row count.  With ``assignments`` (MoR UPDATE) the same
+        commit appends the rows' updated versions as new data files: write
+        cost O(matched rows) regardless of table size, the shape
+        iceberg-spark produces for ``write.update.mode=merge-on-read``.
+
+        Operation-level optimistic retry for vectors: two DV writers
+        racing on the same data file cannot both commit (the rebase would
+        leave two vectors on one file, violating the v3 one-DV-per-file
+        invariant) — _commit_snapshot detects the collision and the loser
+        recomputes everything from fresh state, re-merging the winner's
+        vector.  ``entries`` seeds the first attempt."""
+        dv = mode == "merge-on-read-dv"
+        build = self._dv_delete_build if dv else self._positional_delete_build
+        update = assignments is not None
+        count_key = "updated-records" if update else "deleted-records"
+        for attempt in range(self._commit_retries() + 1):
+            if attempt or entries is None:
+                entries = self._current_entries(branch)
+            self._refuse_positional_over_orc(entries)
+            carried, del_entries, deleted, written = build(entries, cond)
+            if not deleted:
+                return 0
+            new_entries = []
+            if update:
+                rows = self._read_entries_with_lineage(entries).filter(cond)
+                new_entries = self._write_data_dir(
+                    self._apply_assignments(rows, assignments), lineage_cols=True
+                )
+                for e in new_entries:
+                    e["materialized-lineage"] = True
+            try:
+                self._commit_snapshot(
+                    "overwrite" if update else "delete",
+                    carried + del_entries + new_entries,
+                    {count_key: deleted, "mode": mode},
+                    base_snapshot_id=self._branch_head_id(branch),
+                    branch=branch or MAIN_BRANCH,
+                )
+                return deleted
+            except InvalidDataError as exc:
+                if not dv or "deletion vector" not in str(exc):
+                    raise
+                # lost the race to another DV writer: drop this attempt's
+                # puffin and rebuild against fresh state
+                self.ops.io.delete(written)
+                self.refresh()
+                _commit_backoff(attempt)
+        raise InvalidDataError("deletion-vector commit conflict: too many retries")
+
+    @staticmethod
+    def _apply_assignments(
+        rows: DataFrame, assignments: dict[str, Any], where=None
+    ) -> DataFrame:
+        """UPDATE ... SET over lineage-carrying ``rows``: each value is a
+        SQL expression string or a literal; with ``where`` only the rows it
+        holds for change.  Changed rows get a NULL sequence cell, which the
+        read path inherits as the commit's sequence — the spec's "updated
+        rows bump _last_updated_sequence_number, untouched rows keep
+        theirs"; every row keeps its ``_row_id``."""
+
+        def _set(new, old):
+            return new if where is None else F.when(where, new).otherwise(old)
+
+        for col, val in assignments.items():
+            expr = F.expr(val) if isinstance(val, str) else F.lit(val)
+            rows = rows.withColumn(col, _set(expr, F.col(col)))
+        seq = "_last_updated_sequence_number"
+        return rows.withColumn(seq, _set(F.lit(None).cast("long"), F.col(seq)))
+
+    def _keys_or_identifiers(
+        self, on: Union[str, list[str], None], verb: str
+    ) -> list[str]:
+        """``on`` as a key list; when absent, the schema's identifier
+        fields (Iceberg's logical primary key)."""
+        keys = [on] if isinstance(on, str) else list(on or [])
+        if not keys:
+            keys = self.identifier_field_names()
+            if not keys:
+                raise InvalidDataError(
+                    f"{verb} needs keys: pass on=... or declare identifier "
+                    "fields via update_schema().set_identifier_fields(...)"
+                )
+        return keys
+
+    def _changelog_columns(
+        self, changes: DataFrame, on: Union[str, list[str], None], verb: str
+    ) -> tuple[list[str], list[str]]:
+        """(keys, data columns) of a changelog frame — every column but the
+        :meth:`changelog_scan` metadata ones; each key must be among them."""
+        keys = self._keys_or_identifiers(on, verb)
+        data_cols = [
+            c
+            for c in changes.columns
+            if c not in ("_change_type", "_commit_snapshot_id", "_change_ordinal")
+        ]
+        for k in keys:
+            if k not in data_cols:
+                raise InvalidDataError(f"changelog frame lacks key column {k!r}")
+        return keys, data_cols
 
     def apply_changelog(
         self,
@@ -5249,23 +5297,7 @@ class Table:
         the O(changed rows) key-based paths.
 
         ``on=None`` defaults to the schema's identifier fields."""
-        if on is None:
-            on = self.identifier_field_names()
-            if not on:
-                raise InvalidDataError(
-                    "apply_changelog needs keys: pass on=... or declare "
-                    "identifier fields via "
-                    "update_schema().set_identifier_fields(...)"
-                )
-        keys = [on] if isinstance(on, str) else list(on)
-        data_cols = [
-            c
-            for c in changes.columns
-            if c not in ("_change_type", "_commit_snapshot_id", "_change_ordinal")
-        ]
-        for k in keys:
-            if k not in data_cols:
-                raise InvalidDataError(f"changelog frame lacks key column {k!r}")
+        keys, data_cols = self._changelog_columns(changes, on, "apply_changelog")
         from pyspark.sql import Observation
         from pyspark.sql import Window as _W
 
@@ -5380,23 +5412,9 @@ class Table:
         than writing a NULL that would masquerade as an open version.
 
         ``on=None`` defaults to the schema's identifier fields."""
-        if on is None:
-            on = self.identifier_field_names()
-            if not on:
-                raise InvalidDataError(
-                    "apply_changelog_scd2 needs keys: pass on=... or "
-                    "declare identifier fields via "
-                    "update_schema().set_identifier_fields(...)"
-                )
-        keys = [on] if isinstance(on, str) else list(on)
-        data_cols = [
-            c
-            for c in changes.columns
-            if c not in ("_change_type", "_commit_snapshot_id", "_change_ordinal")
-        ]
-        for k in keys:
-            if k not in data_cols:
-                raise InvalidDataError(f"changelog frame lacks key column {k!r}")
+        keys, data_cols = self._changelog_columns(
+            changes, on, "apply_changelog_scd2"
+        )
         have = {f.name for f in self.current_schema().fields}
         missing = [c for c in [*data_cols, "valid_from", "valid_to"] if c not in have]
         if missing:
@@ -5562,13 +5580,10 @@ class Table:
         self._check_writable()
         cols = [on] if isinstance(on, str) else list(on)
         schema = self.current_schema()
-        field_ids = []
         for c in cols:
-            f = schema.field_by_name(c)
-            if f is None:
+            if schema.field_by_name(c) is None:
                 raise InvalidDataError(f"unknown equality column: {c}")
-            field_ids.append(f.field_id)
-        keys_df = (
+        keys_df = self._key_frame(
             keys
             if isinstance(keys, DataFrame)
             else self.spark.createDataFrame(
@@ -5576,19 +5591,9 @@ class Table:
                 ice_t.Schema(
                     fields=[schema.field_by_name(c) for c in cols]
                 ).to_spark(),
-            )
+            ),
+            cols,
         )
-        # spec equality delete files carry the key columns with their
-        # Iceberg field ids stamped in the parquet footer
-        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        keys_df = keys_df.select(
-            *[
-                F.col(c)
-                .cast(schema.field_by_name(c).to_spark().dataType)
-                .alias(c, metadata={"parquet.field.id": schema.field_by_name(c).field_id})
-                for c in cols
-            ]
-        ).distinct()
         if not verify_hits:
             # BLIND CDC delete: no scan, one fast-append seq-scoped
             # equality delete — O(|keys|) total work at any table size
@@ -5605,54 +5610,8 @@ class Table:
                 head = self.current_snapshot()
             if head is None or head.summary.get("total-data-files") == "0":
                 return 0  # nothing the delete could apply to
-            del_dir = os.path.join(
-                self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-            )
-            # range-partition the key files so each carries TIGHT disjoint
-            # key-bounds — after .distinct() the keys are hash-partitioned
-            # and every output file would span ~the global key range,
-            # defeating the per-file bounds pruning this path exists for
-            keys_df.repartitionByRange(*cols).sortWithinPartitions(
-                *cols
-            ).write.parquet(del_dir)
-            written = _read_back_parquet(self.spark, del_dir, keys_df.schema)
-            aggs = [F.count(F.lit(1)).alias("__n")]
-            for j, c in enumerate(cols):
-                aggs += [
-                    F.min(c).alias(f"__lo{j}"),
-                    F.max(c).alias(f"__hi{j}"),
-                    F.sum(F.col(c).isNull().cast("int")).alias(f"__nn{j}"),
-                ]
-            per_file = (
-                written.groupBy(F.col("_metadata.file_path").alias("__part"))
-                .agg(*aggs)
-                .collect()
-            )
-            n_keys = 0
-            delete_entries = []
-            for r in sorted(per_file, key=lambda r: r["__part"]):
-                part = _spark_uri_path(r["__part"])
-                n_keys += r["__n"]
-                lo, hi = {}, {}
-                for j, c in enumerate(cols):
-                    if r[f"__nn{j}"]:
-                        continue  # null keys: bounds can't witness them
-                    lv = _plain_bound_literal(r[f"__lo{j}"])
-                    hv = _plain_bound_literal(r[f"__hi{j}"])
-                    if lv is not None and hv is not None:
-                        lo[c], hi[c] = lv, hv
-                entry = {
-                    "delete-file": part,
-                    "seq-scoped": True,
-                    "deleted-records": r["__n"],
-                    "content": "equality-deletes",
-                    "equality-ids": list(field_ids),
-                    "equality-cols": list(cols),
-                    "spec-id": self.default_spec_id,
-                }
-                if lo:
-                    entry["key-bounds"] = {"lower": lo, "upper": hi}
-                delete_entries.append(entry)
+            delete_entries = self._write_equality_deletes(keys_df, cols, None)
+            n_keys = sum(e["deleted-records"] for e in delete_entries)
             self._commit_snapshot(
                 "delete",
                 delete_entries,
@@ -5709,53 +5668,124 @@ class Table:
         # nothing, exactly like before (r6 review item: a 10^8-key
         # backfill must fall back to a shuffle semi-join, not OOM the
         # driver).
-        del_dir = os.path.join(self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}")
-        keys_df.sortWithinPartitions(*cols).write.parquet(del_dir)
-        written = _read_back_parquet(self.spark, del_dir, keys_df.schema)
-        # size/cleanup through the table's FileIO (r14 review): the key
-        # files live under the TABLE location, which need not be local
-        size_bytes = sum(
-            self.ops.io.size(p) or 0
-            for p in self.ops.io.list(del_dir)
-            if p.endswith(".parquet")
-        )
-        match_cond = [live[c].eqNullSafe(written[c]) for c in cols]
-        keys_side = (
-            F.broadcast(written)
-            if size_bytes <= _BROADCAST_KEYS_MAX_BYTES // 4
-            else written
-        )
-        try:
-            hit_rows = (
+        hit_rows = []
+
+        def _hit_files(written: DataFrame, del_dir: str) -> list[str]:
+            # size through the table's FileIO (r14 review): the key files
+            # live under the TABLE location, which need not be local
+            size_bytes = sum(
+                self.ops.io.size(p) or 0
+                for p in self.ops.io.list(del_dir)
+                if p.endswith(".parquet")
+            )
+            keys_side = (
+                F.broadcast(written)
+                if size_bytes <= _BROADCAST_KEYS_MAX_BYTES // 4
+                else written
+            )
+            match_cond = [live[c].eqNullSafe(written[c]) for c in cols]
+            hit_rows.extend(
                 live.join(keys_side, match_cond, "left_semi")
                 .groupBy("__f")
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             )
-        except Exception:
-            # the key files are written BEFORE verification (one keys
-            # evaluation instead of two); a failed hit-count must not
-            # leak the uncommitted delete dir
-            try:
-                self.ops.io.delete_prefix(del_dir)
-            except OSError:
-                pass
-            raise
-        deleted = sum(r["n"] for r in hit_rows)
-        if not deleted:
-            self.ops.io.delete_prefix(del_dir)
+            return sorted(r["__f"] for r in hit_rows)
+
+        delete_entries = self._write_equality_deletes(keys_df, cols, _hit_files)
+        if not delete_entries:
             return 0
+        deleted = sum(r["n"] for r in hit_rows)
         self._commit_snapshot(
             "delete",
-            entries
-            + self._equality_delete_entries(
-                del_dir, sorted(r["__f"] for r in hit_rows), field_ids, cols
-            ),
+            entries + delete_entries,
             {"deleted-records": deleted, "mode": "merge-on-read-equality"},
             base_snapshot_id=self._branch_head_id(branch),
             branch=branch or MAIN_BRANCH,
         )
         return deleted
+
+    def _key_frame(self, rows: DataFrame, cols: list[str]) -> DataFrame:
+        """The distinct ``cols`` tuples of ``rows``, cast to the table's
+        types and carrying their Iceberg field ids — spec equality delete
+        files stamp the key columns' field ids in the parquet footer."""
+        schema = self.current_schema()
+        return rows.select(
+            *[
+                F.col(c)
+                .cast(schema.field_by_name(c).to_spark().dataType)
+                .alias(c, metadata={"parquet.field.id": schema.field_by_name(c).field_id})
+                for c in cols
+            ]
+        ).distinct()
+
+    def _write_equality_deletes(
+        self, keys: DataFrame, cols: list[str], applies_to
+    ) -> list[dict[str, Any]]:
+        """The one equality-delete writer: a :meth:`_key_frame` → field-id-
+        stamped parquet in a fresh ``deletes-*`` directory → one manifest
+        entry per part file.  ``applies_to`` scopes the delete: a list of
+        data files; a callable ``(read-back keys, directory) -> list`` that
+        finds them against the written keys; or None for sequence-scoped
+        entries with per-file key bounds — range-partitioned first so each
+        file's bounds are TIGHT (after the distinct the keys are hash-
+        partitioned and every file would span ~the global key range,
+        defeating the bounds pruning this shape exists for).  The directory
+        is removed when the scope comes out empty and on ANY failure after
+        the write, so an uncommitted key file never leaks."""
+        schema = self.current_schema()
+        field_ids = [schema.field_by_name(c).field_id for c in cols]
+        del_dir = self._new_delete_path()
+        self._enable_field_id_writes()
+        if applies_to is None:
+            keys = keys.repartitionByRange(*cols)
+        keys.sortWithinPartitions(*cols).write.parquet(del_dir)
+        entries: list[dict[str, Any]] = []
+        done = False
+        try:
+            if applies_to is None or callable(applies_to):
+                written = _read_back_parquet(self.spark, del_dir, keys.schema)
+            if applies_to is None:
+                # per part file: key count and per-column bounds, one job
+                aggs = [F.count(F.lit(1)).alias("__n")]
+                for j, c in enumerate(cols):
+                    aggs += [
+                        F.min(c).alias(f"__lo{j}"),
+                        F.max(c).alias(f"__hi{j}"),
+                        F.sum(F.col(c).isNull().cast("int")).alias(f"__nn{j}"),
+                    ]
+                per_file = (
+                    written.groupBy(F.col("_metadata.file_path").alias("__part"))
+                    .agg(*aggs)
+                    .collect()
+                )
+                for r in sorted(per_file, key=lambda r: r["__part"]):
+                    bounded = [(j, c) for j, c in enumerate(cols) if not r[f"__nn{j}"]]
+                    entries.append(
+                        _seq_scoped_delete_entry(
+                            _spark_uri_path(r["__part"]),
+                            r["__n"],
+                            field_ids,
+                            cols,
+                            self.default_spec_id,
+                            {c: r[f"__lo{j}"] for j, c in bounded},
+                            {c: r[f"__hi{j}"] for j, c in bounded},
+                        )
+                    )
+            else:
+                if callable(applies_to):
+                    applies_to = applies_to(written, del_dir)
+                if applies_to:
+                    entries = self._equality_delete_entries(
+                        del_dir, applies_to, field_ids, cols
+                    )
+            done = True
+        finally:
+            if not (done and entries):
+                # a cleanup failure must not mask the error being raised
+                with contextlib.suppress(OSError):
+                    self.ops.io.delete_prefix(del_dir)
+        return entries
 
     def _scope_overlap_files(
         self, excluded: list[dict[str, Any]], keys_df: DataFrame, cols: list[str]
@@ -5813,30 +5843,15 @@ class Table:
         shape — a manifest entry names a file, not a directory), with
         ``deleted-records`` = key rows in THAT file, which is what the
         spec's delete-file ``record_count`` means for equality deletes.
-        The matched-data-row total goes in the commit summary instead."""
-        out = []
-        for part, n in self._delete_part_counts(del_dir):
-            out.append(
-                {
-                    "delete-file": part,
-                    "applies-to": list(applies),
-                    "deleted-records": n,
-                    "content": "equality-deletes",
-                    "equality-ids": list(field_ids),
-                    "equality-cols": list(cols),
-                    "spec-id": self.default_spec_id,
-                }
-            )
-        return out
+        The matched-data-row total goes in the commit summary instead.
 
-    def _delete_part_counts(self, del_dir: str) -> list:
-        """``(path, rows)`` per parquet part file of a freshly written
-        delete directory, sorted by path.  Footer fast path (guide §1.2 —
-        the same move as the manifest footer stats): the counts ARE the
-        parquet footers' ``num_rows``, so local files need no Spark read
-        job at all; non-local IO or any footer surprise falls back to the
-        Spark aggregation.  Zero-row part files are skipped on both paths
-        (the aggregation emits no group for them)."""
+        Footer fast path (guide §1.2 — the same move as the manifest
+        footer stats): the counts ARE the parquet footers' ``num_rows``,
+        so local files need no Spark read job at all; non-local IO or any
+        footer surprise falls back to the Spark aggregation.  Zero-row part
+        files are skipped on both paths (the aggregation emits no group for
+        them)."""
+        counts = None
         try:
             import pyarrow.parquet as _pq
 
@@ -5844,81 +5859,30 @@ class Table:
                 p for p in self.ops.io.list(del_dir) if p.endswith(".parquet")
             )
             if paths and all(os.path.isfile(p) for p in paths):
-                counts = [
-                    (p, _pq.ParquetFile(p).metadata.num_rows) for p in paths
-                ]
-                return [(p, n) for p, n in counts if n]
+                counts = [(p, _pq.ParquetFile(p).metadata.num_rows) for p in paths]
         except Exception:
-            pass
-        written = self.spark.read.parquet(del_dir)
-        rows = (
-            written.groupBy(F.col("_metadata.file_path").alias("__part"))
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        return sorted((_spark_uri_path(r["__part"]), r["__n"]) for r in rows)
-
-    def _update_where_mor(
-        self, assignments: dict[str, Any], cond, mode: str,
-        branch: Optional[str] = None,
-    ) -> int:
-        """Merge-on-read UPDATE: ONE commit that (a) marks the current
-        versions of matching rows dead — deletion vectors on v3, positional
-        delete files on v2 — and (b) appends their updated versions as new
-        data files.  Write cost is O(matched rows) regardless of table
-        size (no data-file rewrite), the shape iceberg-spark produces for
-        ``write.update.mode=merge-on-read``.  Row lineage follows the
-        spec's update rules: carried ``_row_id``, NULL'd sequence cell
-        (rows inherit the commit's sequence on read)."""
-        target = branch or MAIN_BRANCH
-        for attempt in range(self._commit_retries() + 1):
-            cur_entries = self._current_entries(branch)
-            if mode == "merge-on-read-dv":
-                carried, del_entries, deleted, dv_path = self._dv_delete_build(
-                    cur_entries, cond
-                )
-                base_entries = carried
-            else:
-                del_entries, deleted = self._positional_delete_build(
-                    cur_entries, cond
-                )
-                base_entries, dv_path = cur_entries, None
-            if not deleted:
-                return 0
-            out = self._read_entries_with_lineage(cur_entries).filter(cond)
-            for col, val in assignments.items():
-                expr = F.expr(val) if isinstance(val, str) else F.lit(val)
-                out = out.withColumn(col, expr)
-            out = out.withColumn(
-                "_last_updated_sequence_number", F.lit(None).cast("long")
+            counts = None
+        if counts is None:
+            rows = (
+                self.spark.read.parquet(del_dir)
+                .groupBy(F.col("_metadata.file_path").alias("__part"))
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .collect()
             )
-            new_entries = self._write_data_dir(
-                out.select(
-                    *[f.name for f in self.current_schema().fields],
-                    "_row_id",
-                    "_last_updated_sequence_number",
-                ),
-                lineage_cols=True,
-            )
-            for e in new_entries:
-                e["materialized-lineage"] = True
-            try:
-                self._commit_snapshot(
-                    "overwrite",
-                    base_entries + del_entries + new_entries,
-                    {"updated-records": deleted, "mode": mode},
-                    base_snapshot_id=self._branch_head_id(branch),
-                    branch=target,
-                )
-                return deleted
-            except InvalidDataError as exc:
-                if mode != "merge-on-read-dv" or "deletion vector" not in str(exc):
-                    raise
-                # lost a DV race: drop this attempt's puffin, rebuild fresh
-                self.ops.io.delete(dv_path)
-                self.refresh()
-                _commit_backoff(attempt)
-        raise InvalidDataError("deletion-vector commit conflict: too many retries")
+            counts = sorted((_spark_uri_path(r["__part"]), r["__n"]) for r in rows)
+        return [
+            {
+                "delete-file": part,
+                "applies-to": list(applies),
+                "deleted-records": n,
+                "content": "equality-deletes",
+                "equality-ids": list(field_ids),
+                "equality-cols": list(cols),
+                "spec-id": self.default_spec_id,
+            }
+            for part, n in counts
+            if n
+        ]
 
     def update_where(
         self,
@@ -5930,7 +5894,7 @@ class Table:
         """UPDATE.  ``mode=None`` (default) resolves the table's
         ``write.update.mode`` property — ``copy-on-write`` unless set;
         ``merge-on-read`` resolves to deletion vectors on v3 tables and
-        positional delete files on v2 (see ``_update_where_mor``).
+        positional delete files on v2 (see ``_mor_position_commit``).
         Copy-on-write is file-pruned: rewrite only files containing
         matching rows."""
         self._check_writable()
@@ -5938,54 +5902,25 @@ class Table:
             mode = self._resolve_write_mode("write.update.mode")
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if mode in ("merge-on-read-positional", "merge-on-read-dv"):
-            return self._update_where_mor(assignments, cond, mode, branch=branch)
+            return self._mor_position_commit(
+                mode, cond, branch, assignments=assignments
+            )
         if mode != "copy-on-write":
             raise InvalidDataError(f"unknown update mode: {mode}")
         entries = self._current_entries(branch)
-        data, preds = self._split_entries(entries)
         # full entry list: prior MoR deletes apply, so the count is an
         # honest delta and all-dead files skip the rewrite (see delete_where)
-        hits = self._matching_files(
-            entries, cond, cond_str=condition if isinstance(condition, str) else None
-        )
+        hits = self._matching_files(entries, condition)
         updated = sum(hits.values())
-        if not hits:
-            return 0
-        hit_entries = [e for e in data if e.get("path") in hits or "data-dir" in e]
-        keep_entries = [e for e in data if e.get("path") not in hits and "data-dir" not in e]
-        # v3 row lineage through the rewrite: every row keeps its _row_id;
-        # rows the UPDATE touches get a NULL materialized sequence cell,
-        # which the read path inherits as the rewrite commit's sequence —
-        # exactly the spec's "updated rows bump _last_updated_sequence_
-        # number, untouched rows keep theirs" semantics
-        out = self._read_entries_with_lineage(hit_entries + preds)
-        for col, val in assignments.items():
-            expr = F.expr(val) if isinstance(val, str) else F.lit(val)
-            out = out.withColumn(col, F.when(cond, expr).otherwise(F.col(col)))
-        out = out.withColumn(
-            "_last_updated_sequence_number",
-            F.when(cond, F.lit(None).cast("long")).otherwise(
-                F.col("_last_updated_sequence_number")
-            ),
-        )
-        new_entries = self._write_data_dir(
-            out.select(
-                *[f.name for f in self.current_schema().fields],
-                "_row_id",
-                "_last_updated_sequence_number",
-            ),
-            lineage_cols=True,
-        )
-        for e in new_entries:
-            e["materialized-lineage"] = True
-        kept_paths = {e["path"] for e in keep_entries if "path" in e}
-        self._commit_snapshot(
-            "overwrite",
-            keep_entries + new_entries + self._live_preds(preds, kept_paths, keep_entries),
-            {"updated-records": updated},
-            base_snapshot_id=self._branch_head_id(branch),
-            branch=branch or MAIN_BRANCH,
-        )
+        if hits:
+            self._cow_rewrite(
+                entries,
+                hits,
+                lambda rows: self._apply_assignments(rows, assignments, where=cond),
+                "overwrite",
+                {"updated-records": updated},
+                branch,
+            )
         return updated
 
     def identifier_field_names(self) -> list[str]:
@@ -6010,14 +5945,7 @@ class Table:
         O(changed rows) regardless of table size — the streaming-upsert
         shape at 100 TB.  Accepts the same inputs as :meth:`append`
         (dict rows or a DataFrame)."""
-        keys = [on] if isinstance(on, str) else (list(on) if on else None)
-        if not keys:
-            keys = self.identifier_field_names()
-            if not keys:
-                raise InvalidDataError(
-                    "upsert needs keys: pass on=... or declare identifier "
-                    "fields via update_schema().set_identifier_fields(...)"
-                )
+        keys = self._keys_or_identifiers(on, "upsert")
         source = self._normalize_input(data)
         cols = [f.name for f in self.current_schema().fields]
         updates = {c: f"s.{c}" for c in cols if c not in keys}
@@ -6098,333 +6026,168 @@ class Table:
                 "merge source has duplicate rows for the ON keys; MERGE requires "
                 "at most one source row per target row"
             )
+        clauses = _MergeClauses(
+            when_matched_update,
+            when_matched_delete,
+            when_not_matched_by_source_delete,
+            when_not_matched_by_source_update,
+            when_not_matched_by_source_condition,
+        )
         if mode == "merge-on-read":
             return self._merge_into_mor(
-                source, keys, cols, when_matched_update, when_not_matched_insert,
-                summary_extra, branch=branch,
-                when_matched_delete=when_matched_delete,
-                when_not_matched_by_source_delete=when_not_matched_by_source_delete,
-                when_not_matched_by_source_update=when_not_matched_by_source_update,
-                when_not_matched_by_source_condition=when_not_matched_by_source_condition,
+                source, keys, cols, clauses, when_not_matched_insert,
+                summary_extra, branch,
             )
         if mode != "copy-on-write":
             raise InvalidDataError(f"unknown merge mode: {mode}")
         entries = self._current_entries(branch)
-        data, preds = self._split_entries(entries)
-        # files containing rows whose keys appear in the source (semi-join
-        # against distinct source keys; AQE broadcasts when small);
-        # schema-evolution-aware read with the file path carried alongside
-        if self._entry_files(data):
-            # full entry list: rows dead via prior MoR deletes neither
+        hits = None  # a by-source clause can touch rows in ANY file
+        if not clauses.by_source:
+            # files containing rows whose keys appear in the source, over
+            # the full entry list: rows dead via prior MoR deletes neither
             # count as matches nor force their file into the rewrite
-            t_meta = self._read_entries(entries, file_col="__file")
-            hit_rows = (
-                t_meta.join(source.select(*keys).distinct(), keys, "left_semi")
-                .groupBy("__file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            hits = {r["__file"]: r["n"] for r in hit_rows}
-        else:
-            hits = {}
-        if (
-            when_not_matched_by_source_delete is not None
-            or when_not_matched_by_source_update
-        ):
-            # a by-source clause can touch rows in ANY file (every target
-            # row whose key is absent from the source) — every file rewrites
-            hit_entries, keep_entries = list(data), []
-        else:
-            hit_entries = [
-                e for e in data if e.get("path") in hits or "data-dir" in e
-            ]
-            keep_entries = [
-                e for e in data if e.get("path") not in hits and "data-dir" not in e
-            ]
-        # lineage through the rewrite: existing rows keep _row_id; rows the
-        # UPDATE clause touches write a NULL sequence cell (inherit the
-        # commit's sequence); inserted rows write NULL id AND seq cells,
-        # inheriting first-row-id + position / commit sequence — all three
-        # cases are exactly spec v3's materialization rules
-        target = self._read_entries_with_lineage(hit_entries + preds)
+            hits = self._matching_files(entries, source, on=keys)
         marked = source.withColumn("__s_matched", F.lit(True))
-        matched = target.alias("t").join(marked.alias("s"), keys, "left")
-        is_matched = F.col("__s_matched").isNotNull()
-        if when_matched_delete is not None:
-            # WHEN MATCHED [AND cond] THEN DELETE — evaluated before the
-            # update clause (delete takes precedence for rows both hit)
-            dcond = (
-                F.lit(True)
-                if when_matched_delete is True
-                else F.expr(str(when_matched_delete))
-            )
-            matched = matched.filter(
-                ~(is_matched & F.coalesce(dcond, F.lit(False)))
-            )
-        if when_not_matched_by_source_delete is not None:
-            # WHEN NOT MATCHED BY SOURCE [AND cond] THEN DELETE — prunes
-            # target rows whose key the source no longer carries (the
-            # full-sync mirror clause); cond sees t.* only
-            ncond = (
-                F.lit(True)
-                if when_not_matched_by_source_delete is True
-                else F.expr(str(when_not_matched_by_source_delete))
-            )
-            matched = matched.filter(
-                ~(~is_matched & F.coalesce(ncond, F.lit(False)))
-            )
-        nm_hit = None
-        if when_not_matched_by_source_update:
-            # WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE — rows the
-            # by-source DELETE clause claimed were already filtered out
-            # above, so clause precedence (delete first) holds by
-            # construction
-            ucond = (
-                F.lit(True)
-                if when_not_matched_by_source_condition is None
-                else F.expr(str(when_not_matched_by_source_condition))
-            )
-            nm_hit = ~is_matched & F.coalesce(ucond, F.lit(False))
-        out_cols = []
-        for c in cols:
-            expr = F.col(f"t.{c}")
-            if (
-                when_not_matched_by_source_update
-                and c in when_not_matched_by_source_update
-            ):
-                expr = F.when(
-                    nm_hit, F.expr(when_not_matched_by_source_update[c])
-                ).otherwise(expr)
-            if when_matched_update and c in when_matched_update:
-                expr = F.when(
-                    is_matched, F.expr(when_matched_update[c])
-                ).otherwise(expr)
-            out_cols.append(expr.alias(c))
-        out_cols.append(F.col("t._row_id").alias("_row_id"))
-        seq_col = F.col("t._last_updated_sequence_number")
-        if when_matched_update:
-            seq_col = F.when(is_matched, F.lit(None).cast("long")).otherwise(seq_col)
-        if nm_hit is not None:
-            # by-source-updated rows inherit the commit's sequence too
-            seq_col = F.when(nm_hit, F.lit(None).cast("long")).otherwise(seq_col)
-        out_cols.append(seq_col.alias("_last_updated_sequence_number"))
-        merged = matched.select(*out_cols)
-        if when_not_matched_insert:
-            full_target = self._read_entries(entries)
-            inserts = source.join(full_target.select(*keys), keys, "left_anti")
+
+        def _merged(target: DataFrame) -> DataFrame:
+            # existing rows keep _row_id; rows an UPDATE clause touches
+            # write a NULL sequence cell; inserted rows write NULL id AND
+            # seq cells, inheriting first-row-id + position / the commit's
+            # sequence
+            matched = target.alias("t").join(marked.alias("s"), keys, "left")
+            is_matched = F.col("__s_matched").isNotNull()
+            if clauses.matched_delete is not None:
+                # evaluated before the update clause: delete takes
+                # precedence for rows both hit
+                matched = matched.filter(~(is_matched & clauses.matched_delete))
+            if clauses.by_source_delete is not None:
+                # prunes target rows whose key the source no longer carries
+                # (the full-sync mirror clause); cond sees t.* only
+                matched = matched.filter(~(~is_matched & clauses.by_source_delete))
+            # rows the by-source DELETE claimed are already filtered out, so
+            # clause precedence (delete first) holds by construction
+            nm_hit = None
+            if clauses.by_source_update_when is not None:
+                nm_hit = ~is_matched & clauses.by_source_update_when
+            out_cols = []
             for c in cols:
-                if c not in inserts.columns:
-                    inserts = inserts.withColumn(c, F.lit(None))
-            inserts = inserts.withColumn(
-                "_row_id", F.lit(None).cast("long")
-            ).withColumn("_last_updated_sequence_number", F.lit(None).cast("long"))
-            merged = merged.unionByName(
-                inserts.select(*cols, "_row_id", "_last_updated_sequence_number")
+                expr = F.col(f"t.{c}")
+                if c in clauses.by_source_update:
+                    expr = F.when(nm_hit, clauses.by_source_update[c]).otherwise(expr)
+                if c in clauses.matched_update:
+                    expr = F.when(is_matched, clauses.matched_update[c]).otherwise(expr)
+                out_cols.append(expr.alias(c))
+            null_seq = F.lit(None).cast("long")
+            seq = F.col("t._last_updated_sequence_number")
+            if clauses.matched_update:
+                seq = F.when(is_matched, null_seq).otherwise(seq)
+            if nm_hit is not None:
+                seq = F.when(nm_hit, null_seq).otherwise(seq)
+            merged = matched.select(
+                *out_cols,
+                F.col("t._row_id").alias("_row_id"),
+                seq.alias("_last_updated_sequence_number"),
             )
-        new_entries = self._write_data_dir(merged, lineage_cols=True)
-        for e in new_entries:
-            e["materialized-lineage"] = True
-        kept_paths = {e["path"] for e in keep_entries if "path" in e}
-        self._commit_snapshot(
+            if when_not_matched_insert:
+                inserts = self._merge_inserts(
+                    source, self._read_entries(entries), keys, cols
+                )
+                merged = merged.unionByName(
+                    inserts.withColumn("_row_id", F.lit(None).cast("long"))
+                    .withColumn("_last_updated_sequence_number", null_seq)
+                )
+            return merged
+
+        self._cow_rewrite(
+            entries,
+            hits,
+            _merged,
             "overwrite",
-            keep_entries + new_entries + self._live_preds(preds, kept_paths, keep_entries),
             {"operation-detail": "merge", **(summary_extra or {})},
-            base_snapshot_id=self._branch_head_id(branch),
-            branch=branch or MAIN_BRANCH,
+            branch,
         )
         return self
+
+    @staticmethod
+    def _merge_inserts(
+        source: DataFrame, target: DataFrame, keys: list[str], cols: list[str]
+    ) -> DataFrame:
+        """WHEN NOT MATCHED THEN INSERT: the source rows whose key the
+        target does not hold, as table columns (absent ones NULL)."""
+        inserts = source.join(target.select(*keys), keys, "left_anti")
+        for c in cols:
+            if c not in inserts.columns:
+                inserts = inserts.withColumn(c, F.lit(None))
+        return inserts.select(*cols)
 
     def _merge_into_mor(
         self,
         source: DataFrame,
         keys: list[str],
         cols: list[str],
-        when_matched_update: Optional[dict[str, str]],
+        clauses: _MergeClauses,
         when_not_matched_insert: bool,
-        summary_extra: Optional[dict] = None,
-        branch: Optional[str] = None,
-        when_matched_delete: Union[bool, str, None] = None,
-        when_not_matched_by_source_delete: Union[bool, str, None] = None,
-        when_not_matched_by_source_update: Optional[dict[str, str]] = None,
-        when_not_matched_by_source_condition: Optional[str] = None,
+        summary_extra: Optional[dict],
+        branch: Optional[str],
     ) -> "Table":
-        """merge_into(mode='merge-on-read'): equality-delete the matched
-        keys, append their updated versions plus inserts — single commit,
-        zero rewrites of existing files."""
-        schema = self.current_schema()
+        """merge_into(mode='merge-on-read'): equality-delete the keys of
+        the target rows a clause touches, append their new versions plus
+        the inserts — single commit, zero rewrites of existing files."""
         entries = self._current_entries(branch)
         live = self._read_entries(entries, file_col="__f")
         marked = source.withColumn("__s_matched", F.lit(True))
-        joined = live.alias("t").join(marked.alias("s"), keys, "inner")
-        new_parts: list[DataFrame] = []
-        eq_entries: list[dict[str, Any]] = []
-        if when_matched_update or when_matched_delete is not None:
-            # matched rows: which files they live in (delete scope) and
-            # their distinct key tuples (the equality delete content)
-            hit_rows = (
-                joined.groupBy("__f").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            matched_n = sum(r["n"] for r in hit_rows)
-            if matched_n:
-                self.spark.conf.set(
-                    "spark.sql.parquet.fieldId.write.enabled", "true"
-                )
-                matched_keys = joined.select(
-                    *[
-                        F.col(f"t.{k}").alias(
-                            k,
-                            metadata={
-                                "parquet.field.id": schema.field_by_name(k).field_id
-                            },
-                        )
-                        for k in keys
-                    ]
-                ).distinct()
-                del_dir = os.path.join(
-                    self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-                )
-                matched_keys.sortWithinPartitions(*keys).write.parquet(del_dir)
-                eq_entries = self._equality_delete_entries(
-                    del_dir,
-                    sorted(r["__f"] for r in hit_rows),
-                    [schema.field_by_name(k).field_id for k in keys],
-                    keys,
-                )
-                survivors = joined
-                if when_matched_delete is not None:
-                    # delete-matched rows fall to the equality delete and
-                    # are NOT re-inserted; others re-insert (updated)
-                    dcond = (
-                        F.lit(True)
-                        if when_matched_delete is True
-                        else F.expr(str(when_matched_delete))
-                    )
-                    survivors = joined.filter(
-                        ~F.coalesce(dcond, F.lit(False))
-                    )
-                out_cols = []
-                for c in cols:
-                    if when_matched_update and c in when_matched_update:
-                        out_cols.append(F.expr(when_matched_update[c]).alias(c))
-                    else:
-                        out_cols.append(F.col(f"t.{c}").alias(c))
-                new_parts.append(survivors.select(*out_cols))
-        if when_not_matched_by_source_delete is not None:
-            # WHEN NOT MATCHED BY SOURCE [AND cond] THEN DELETE, MoR form:
+        unmatched = None
+        if clauses.by_source:
+            unmatched = live.alias("t").join(marked.alias("s"), keys, "left_anti")
+        # (rows a clause touches, their new versions or None); each touched
+        # set becomes its own equality-delete file, scoped to the files
+        # its rows live in
+        touched = []
+        if clauses.matched_update or clauses.matched_delete is not None:
+            joined = live.alias("t").join(marked.alias("s"), keys, "inner")
+            # delete-matched rows fall to the equality delete and are NOT
+            # re-inserted; the others re-insert (updated)
+            kept = joined
+            if clauses.matched_delete is not None:
+                kept = joined.filter(~clauses.matched_delete)
+            versions = clauses.versions(kept, cols, clauses.matched_update)
+            touched.append((joined, versions))
+        if clauses.by_source_delete is not None:
             # the loser keys (target keys the source no longer carries)
-            # become a second equality-delete file — O(losers), no rewrite
-            ncond = (
-                F.lit(True)
-                if when_not_matched_by_source_delete is True
-                else F.expr(str(when_not_matched_by_source_delete))
+            touched.append((unmatched.filter(clauses.by_source_delete), None))
+        if clauses.by_source_update_when is not None:
+            # the MoR UPDATE shape on the unmatched rows; rows the by-source
+            # DELETE clause claimed (delete listed first) are excluded
+            stale = unmatched
+            if clauses.by_source_delete is not None:
+                stale = stale.filter(~clauses.by_source_delete)
+            stale = stale.filter(clauses.by_source_update_when)
+            versions = clauses.versions(stale, cols, clauses.by_source_update)
+            touched.append((stale, versions))
+        eq_entries: list[dict[str, Any]] = []
+        new_parts: list[DataFrame] = []
+        for rows, versions in touched:
+            hit_files = sorted(
+                r["__f"] for r in rows.select("__f").distinct().collect()
             )
-            losers = live.alias("t").join(marked.alias("s"), keys, "left_anti")
-            if when_not_matched_by_source_delete is not True:
-                losers = losers.filter(F.coalesce(ncond, F.lit(False)))
-            lose_rows = (
-                losers.groupBy("__f").agg(F.count(F.lit(1)).alias("n")).collect()
+            if not hit_files:
+                continue
+            eq_entries += self._write_equality_deletes(
+                self._key_frame(rows, keys), keys, hit_files
             )
-            if lose_rows:
-                self.spark.conf.set(
-                    "spark.sql.parquet.fieldId.write.enabled", "true"
-                )
-                loser_keys = losers.select(
-                    *[
-                        F.col(f"t.{k}").alias(
-                            k,
-                            metadata={
-                                "parquet.field.id": schema.field_by_name(k).field_id
-                            },
-                        )
-                        for k in keys
-                    ]
-                ).distinct()
-                lose_dir = os.path.join(
-                    self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-                )
-                loser_keys.sortWithinPartitions(*keys).write.parquet(lose_dir)
-                eq_entries += self._equality_delete_entries(
-                    lose_dir,
-                    sorted(r["__f"] for r in lose_rows),
-                    [schema.field_by_name(k).field_id for k in keys],
-                    keys,
-                )
-        if when_not_matched_by_source_update:
-            # WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE, MoR form:
-            # the _update_where_mor shape — equality-delete the stale
-            # versions' keys, append the updated versions.  Rows the
-            # by-source DELETE clause claimed (delete listed first) are
-            # excluded up front.
-            upd_losers = live.alias("t").join(marked.alias("s"), keys, "left_anti")
-            if when_not_matched_by_source_delete is not None:
-                ndcond = (
-                    F.lit(True)
-                    if when_not_matched_by_source_delete is True
-                    else F.expr(str(when_not_matched_by_source_delete))
-                )
-                upd_losers = upd_losers.filter(~F.coalesce(ndcond, F.lit(False)))
-            if when_not_matched_by_source_condition is not None:
-                upd_losers = upd_losers.filter(
-                    F.coalesce(
-                        F.expr(str(when_not_matched_by_source_condition)),
-                        F.lit(False),
-                    )
-                )
-            upd_rows = (
-                upd_losers.groupBy("__f").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            if upd_rows:
-                self.spark.conf.set(
-                    "spark.sql.parquet.fieldId.write.enabled", "true"
-                )
-                upd_keys = upd_losers.select(
-                    *[
-                        F.col(f"t.{k}").alias(
-                            k,
-                            metadata={
-                                "parquet.field.id": schema.field_by_name(k).field_id
-                            },
-                        )
-                        for k in keys
-                    ]
-                ).distinct()
-                upd_dir = os.path.join(
-                    self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-                )
-                upd_keys.sortWithinPartitions(*keys).write.parquet(upd_dir)
-                eq_entries += self._equality_delete_entries(
-                    upd_dir,
-                    sorted(r["__f"] for r in upd_rows),
-                    [schema.field_by_name(k).field_id for k in keys],
-                    keys,
-                )
-                out_cols = []
-                for c in cols:
-                    if c in when_not_matched_by_source_update:
-                        out_cols.append(
-                            F.expr(when_not_matched_by_source_update[c]).alias(c)
-                        )
-                    else:
-                        out_cols.append(F.col(f"t.{c}").alias(c))
-                new_parts.append(upd_losers.select(*out_cols))
+            if versions is not None:
+                new_parts.append(versions)
         if when_not_matched_insert:
-            inserts = source.join(live.select(*keys), keys, "left_anti")
-            for c in cols:
-                if c not in inserts.columns:
-                    inserts = inserts.withColumn(c, F.lit(None))
-            new_parts.append(inserts.select(*cols))
-        if not new_parts and not eq_entries:
-            return self
-        merged = new_parts[0] if new_parts else None
-        for p in new_parts[1:]:
-            merged = merged.unionByName(p)
-        new_entries = self._write_data_dir(merged) if merged is not None else []
+            new_parts.append(self._merge_inserts(source, live, keys, cols))
+        new_entries = []
+        if new_parts:
+            merged = reduce(DataFrame.unionByName, new_parts)
+            new_entries = self._write_data_dir(merged)
         if not new_entries and not eq_entries:
             return self
-        all_new = entries + eq_entries + new_entries
         self._commit_snapshot(
             "overwrite",
-            all_new,
+            entries + eq_entries + new_entries,
             {
                 "operation-detail": "merge",
                 "mode": "merge-on-read",
@@ -6635,8 +6398,6 @@ class Table:
         one read of the delete files themselves.  Returns iceberg-spark's
         result vocabulary."""
         self._check_writable()
-        import uuid as uuid_mod
-
         entries = self._current_entries()
         pos = [e for e in entries if e.get("content") == "position-deletes"]
         if len(pos) <= 1:
@@ -6645,64 +6406,22 @@ class Table:
                 "added_delete_files_count": 0,
             }
         others = [e for e in entries if e.get("content") != "position-deletes"]
-        loc = self.ops.location
-        base = (loc if "://" in loc else os.path.abspath(loc)).rstrip("/")
-        # strip each entry's write-time base, union, dedup, re-absolutize
-        # against the CURRENT location (same normalization the read path
-        # applies, so consolidation survives prior rename_table moves)
-        parts = []
-        for e in pos:
-            df_e = _memo_read_parquet(
-                self.spark, [self.ops._abs(e["delete-file"])]
-            ).select("file_path", F.col("pos").cast("long").alias("pos"))
-            ebase = (e.get("base-location") or base).rstrip("/")
-            rel = F.regexp_replace(
-                F.col("file_path"), "^" + re.escape(ebase + "/"), ""
+        # re-absolutize against the CURRENT location with the read path's
+        # normalization (so consolidation survives prior rename_table
+        # moves), then dedup
+        merged = (
+            _memo_read_parquet(
+                self.spark, [self.ops._abs(e["delete-file"]) for e in pos]
             )
-            parts.append(df_e.select(rel.alias("file_path"), "pos"))
-        merged = parts[0]
-        for p_ in parts[1:]:
-            merged = merged.unionByName(p_)
-        is_abs = F.col("file_path").rlike("^(/|[A-Za-z][A-Za-z0-9+.-]*:)")
-        merged = merged.distinct().select(
-            F.when(is_abs, F.col("file_path"))
-            .otherwise(F.concat(F.lit(base + "/"), F.col("file_path")))
-            .alias("file_path", metadata={"parquet.field.id": 2147483546}),
-            F.col("pos").alias("pos", metadata={"parquet.field.id": 2147483545}),
-        )
-        del_dir = os.path.join(
-            self.ops.data_dir, f"deletes-{uuid_mod.uuid4().hex[:12]}"
-        )
-        self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        merged.repartition(F.col("file_path")).sortWithinPartitions(
-            "file_path", "pos"
-        ).write.parquet(del_dir)
-        written = _read_back_parquet(self.spark, del_dir, merged.schema)
-        per_file = (
-            written.groupBy(F.col("_metadata.file_path").alias("__part"))
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.collect_set("file_path").alias("__targets"),
+            .select(
+                self._absolute_delete_paths(pos).alias("file_path"),
+                F.col("pos").cast("long").alias("pos"),
             )
-            .collect()
+            .distinct()
         )
-        strip = base + "/"
-        new_entries = []
-        for r in sorted(per_file, key=lambda r: r["__part"]):
-            part = _spark_uri_path(r["__part"])
-            new_entries.append(
-                {
-                    "delete-file": part,
-                    "applies-to": sorted(
-                        t[len(strip):] if t.startswith(strip) else t
-                        for t in r["__targets"]
-                    ),
-                    "deleted-records": r["__n"],
-                    "content": "position-deletes",
-                    "base-location": base,
-                    "spec-id": self.default_spec_id,
-                }
-            )
+        _del_dir, new_entries = self._write_position_deletes(
+            merged, self._table_base()
+        )
         self._commit_snapshot(
             "replace",
             others + new_entries,
@@ -7755,6 +7474,84 @@ def _plain_bound_literal(v: Any):
     if isinstance(v, (int, float, str)):
         return v
     return None
+
+
+def _seq_scoped_delete_entry(
+    path: str,
+    count: int,
+    field_ids: list[int],
+    cols: list[str],
+    spec_id: int,
+    lower: dict[str, Any],
+    upper: dict[str, Any],
+) -> dict[str, Any]:
+    """Manifest entry of one SEQUENCE-scoped equality delete file (it
+    applies to every data file with a strictly lower data sequence) — the
+    blind-CDC shape of ``delete_by_keys`` and the streaming upsert sink.
+    ``lower`` / ``upper``: the file's per-key-column min/max, columns with
+    a null key left out (bounds cannot witness nulls); columns whose both
+    bounds have a plain-JSON form become the ``key-bounds`` hint."""
+    entry = {
+        "delete-file": path,
+        "seq-scoped": True,
+        "deleted-records": count,
+        "content": "equality-deletes",
+        "equality-ids": list(field_ids),
+        "equality-cols": list(cols),
+        "spec-id": spec_id,
+    }
+    lo = {c: w for c, v in lower.items() if (w := _plain_bound_literal(v)) is not None}
+    hi = {c: w for c, v in upper.items() if (w := _plain_bound_literal(v)) is not None}
+    bounded = [c for c in lo if c in hi]
+    if bounded:
+        entry["key-bounds"] = {
+            "lower": {c: lo[c] for c in bounded},
+            "upper": {c: hi[c] for c in bounded},
+        }
+    return entry
+
+
+class _MergeClauses:
+    """A MERGE's clauses compiled once into Spark columns over the target
+    ``t`` ⋈ source ``s`` join, for both merge materializers: null-safe
+    conditions (a NULL result does not fire the clause; None = clause
+    absent) and column → new-value assignment maps."""
+
+    def __init__(
+        self,
+        matched_update: Optional[dict[str, str]],
+        matched_delete: Union[bool, str, None],
+        by_source_delete: Union[bool, str, None],
+        by_source_update: Optional[dict[str, str]],
+        by_source_condition: Optional[str],
+    ):
+        self.matched_update = self._assign(matched_update)
+        self.matched_delete = self._cond(matched_delete)
+        self.by_source_delete = self._cond(by_source_delete)
+        self.by_source_update = self._assign(by_source_update)
+        self.by_source = by_source_delete is not None or bool(by_source_update)
+        # the by-source UPDATE's AND condition, TRUE when it has none
+        self.by_source_update_when = None
+        if by_source_update:
+            self.by_source_update_when = self._cond(
+                True if by_source_condition is None else by_source_condition
+            )
+
+    @staticmethod
+    def _cond(c):
+        if c is None:
+            return None
+        return F.lit(True) if c is True else F.coalesce(F.expr(str(c)), F.lit(False))
+
+    @staticmethod
+    def _assign(m: Optional[dict[str, str]]) -> dict:
+        return {c: F.expr(v) for c, v in (m or {}).items()}
+
+    @staticmethod
+    def versions(rows: DataFrame, cols: list[str], assigned: dict) -> DataFrame:
+        """One clause's new row versions as table columns: the assigned
+        value where the clause sets one, the target's value otherwise."""
+        return rows.select(*[assigned.get(c, F.col(f"t.{c}")).alias(c) for c in cols])
 
 
 def _compile_seq_scope(delete_entry: dict[str, Any]) -> tuple:

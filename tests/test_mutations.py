@@ -282,6 +282,31 @@ def test_equality_delete_by_keys(catalog, spark):
     assert sorted(r["k"] for r in t.to_a()) == [0, 1, 4, 6, 7, 8, 9]
 
 
+@pytest.mark.parametrize("verify", [True, False])
+def test_delete_by_keys_failure_after_key_write_leaves_no_files(
+    catalog, monkeypatch, verify
+):
+    """The key files are written before the hit count (or the per-file
+    bounds) is computed; a failure anywhere after that write — here the
+    read-back itself — must remove the uncommitted deletes-* directory."""
+    import os
+
+    import iceberg_ruby_spark.table as table_mod
+
+    t = catalog.create_table("eqleak", schema={"k": "int"})
+    t.append([{"k": i} for i in range(5)])
+
+    def _fail(*_a, **_kw):
+        raise RuntimeError("read-back failed")
+
+    monkeypatch.setattr(table_mod, "_read_back_parquet", _fail)
+    with pytest.raises(RuntimeError, match="read-back failed"):
+        t.delete_by_keys([(1,)], on="k", verify_hits=verify)
+    monkeypatch.undo()
+    assert not [d for d in os.listdir(t.ops.data_dir) if d.startswith("deletes-")]
+    assert sorted(r["k"] for r in t.to_a()) == list(range(5))
+
+
 def test_equality_delete_scoped_hit_scan(catalog, spark):
     """delete_by_keys(scope=...) bounds-prunes the hit-finding scan AND
     the delete entry's applies-to: a truthful scope gives identical

@@ -150,6 +150,32 @@ def test_uri_parsing_rejects_other_engines(spark):
         ice.SqlCatalog(uri="postgres://host/db", spark=spark)
 
 
+@pytest.mark.parametrize(
+    "uri, path",
+    [
+        ("sqlite:///abs/x.db", "/abs/x.db"),
+        ("sqlite:////tmp/d/x.db", "//tmp/d/x.db"),
+        ("sqlite://rel/x.db", "rel/x.db"),
+        ("sqlite:rel.db", "rel.db"),
+        ("sqlite:/abs.db", "/abs.db"),
+        ("bare/x.db", "bare/x.db"),
+    ],
+)
+def test_sqlite_uri_keeps_absolute_paths_absolute(uri, path):
+    from iceberg_ruby_spark.sql_catalog import _parse_uri
+
+    assert _parse_uri(uri) == path
+
+
+def test_sqlite_db_file_lands_at_the_absolute_path(spark, tmp_path):
+    wh = str(tmp_path / "wh")
+    cat = ice.SqlCatalog(
+        uri=f"sqlite:///{tmp_path}/catalog.db", warehouse=wh, spark=spark
+    )
+    cat.create_namespace("default")
+    assert (tmp_path / "catalog.db").is_file()
+
+
 def test_sql_insert_overwrite_and_truncate(spark):
     import iceberg_ruby_spark as ice
 
